@@ -392,63 +392,43 @@ def connected_components(
     real dedup pipeline keeps: one representative per cluster.
 
     Output: (doc_id, component) where component = min doc_id reachable.
-    Each round is one join + one agg; ``localCheckpoint`` truncates the
-    growing lineage so round N doesn't replay rounds 1..N−1.
+    Each round is one shuffle of the shared graph round driver
+    (:func:`.graph._round`): every node pushes its label to its
+    neighbor array, the node-keyed aggregate takes the min with its own
+    label (carried on the keep row as ``old``), and the changed count
+    is observed on the round's ``localCheckpoint`` — no separate join
+    or count job.
     """
-    from .graph import coarse_iter_shuffles
+    from .graph import _adjacency, _carry, _local, _push, _round
 
-    edges = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    converged = False
-    with coarse_iter_shuffles(pairs.sparkSession):
-        edges = (
-            edges.union(
-                edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    a, b = F.col(a_col), F.col(b_col)
+    labels, _ = _adjacency(
+        pairs.select(a.alias("node"), b.alias("nbrs")).union(
+            pairs.select(b.alias("node"), a.alias("nbrs"))
+        ),
+        ("nbrs",),
+    )
+    labels = labels.select("node", "nbrs", F.col("node").alias("label"))
+    push = _push("nbrs", F.col("label"))
+    aggs = [
+        *_carry("nbrs"),
+        F.least(F.min("label"), F.min("_m")).alias("label"),
+        F.min("label").alias("old"),
+    ]
+    changed = [F.count_if(F.col("label") < F.col("old")).alias("changed")]
+    for _ in range(max_iter):
+        labels, m = _round(labels, push, aggs, changed, _local)
+        if m["changed"] == 0:
+            return labels.select(
+                F.col("node").alias("doc_id"), F.col("label").alias("component")
             )
-            .distinct()
-            .localCheckpoint()
-        )
-        labels = (
-            edges.select(F.col("a").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("label"))
-            .localCheckpoint()
-        )
-        for _ in range(max_iter):
-            nbr = (
-                edges.join(labels, edges.b == labels.node)
-                .groupBy("a")
-                .agg(F.min("label").alias("nbr_label"))
-            )
-            merged = (
-                labels.join(nbr, labels.node == nbr.a, "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"),
-                        F.coalesce(F.col("nbr_label"), F.col("label")),
-                    ).alias("label"),
-                )
-                .localCheckpoint()
-            )
-            changed = (
-                merged.alias("m")
-                .join(labels.alias("l"), "node")
-                .filter(F.col("m.label") < F.col("l.label"))
-                .count()
-            )
-            labels = merged
-            if changed == 0:
-                converged = True
-                break
-    if not converged:
-        # silent partial propagation would split duplicate clusters
-        # undetected — fail loudly instead
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); a component's diameter "
-            "exceeds max_iter — raise max_iter"
-        )
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component"))
+    # silent partial propagation would split duplicate clusters
+    # undetected — fail loudly instead
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds "
+        f"({m['changed']} labels still changing); a component's diameter "
+        "exceeds max_iter — raise max_iter"
+    )
 
 
 def keep_flags(docs: DataFrame, components: DataFrame) -> DataFrame:

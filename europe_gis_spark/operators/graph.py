@@ -2,44 +2,35 @@
 a crawl pipeline: PageRank-style authority scoring feeds the same
 corpus-selection stage as the quality scores in textops).
 
-Same distributed shape as ``dedup.connected_components``: each
-iteration is one join + one aggregation, lineage truncated per round
-with ``localCheckpoint`` so round N never replays rounds 1..N−1. At
-corpus scale both sides hash-partition on the node key; no driver-side
-state beyond one scalar (the dangling-mass sum) per iteration.
+The fixpoint loops — ``pagerank`` (fixed or ``tol`` mode),
+``pagerank_personalized``, ``hits`` and
+``dedup.connected_components`` — share one round driver,
+:func:`_round`:
+
+* setup snapshots the deduplicated, self-loop-free adjacency once, one
+  row per node: ``(node, outs[, ins])`` (:func:`_adjacency`); the node
+  count comes from an ``Observation`` on that snapshot;
+* every round is ONE node-keyed shuffle: each node pushes a value along
+  an adjacency array (``explode``), the pushes are unioned with one
+  keep row per node (its arrays and own state), and a single hash
+  aggregate folds them — no joins, and the adjacency travels with the
+  state instead of being re-read;
+* the aggregate is snapshotted (eager ``localCheckpoint``, so round N
+  never replays rounds 1..N−1), and the round's scalars — dangling
+  mass, L1 totals, L1 delta, changed-label count — come from an
+  ``Observation`` on that snapshot, delivered by the snapshot's own job
+  and fed to the next round as literals.
+
+A round is therefore two Spark jobs (shuffle map stage + snapshot) and
+the driver holds nothing beyond a few scalars per round.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import os
+import tempfile
 
-from pyspark.sql import DataFrame, functions as F
-
-
-@contextmanager
-def coarse_iter_shuffles(spark, min_size: str = "1m"):
-    """Scope-limited AQE coalesce floor for TINY-state iterative loops.
-
-    The session default floors `coalescePartitions.minPartitionSize` at
-    1 byte so CPU-dense shuffles (text hashing, pairwise cosine) spread
-    across every core. Label-propagation state is the opposite regime —
-    a few KB per round, trivial per-row work — where 32-way spreading
-    just multiplies task overhead by rounds × stages (measured:
-    cc_components 6.2 s → 9.7 s, 282 task-core-s, after the session
-    change). Restoring the 1 MB floor around the loop lets AQE collapse
-    each round to a handful of tasks; every round's work is
-    materialized (eager localCheckpoint / count) inside the scope, so
-    the restored conf can't leak into the caller's plan."""
-    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, min_size)
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
 #: above this node count the per-round rank snapshot moves from
@@ -47,6 +38,119 @@ def coarse_iter_shuffles(spark, min_size: str = "1m"):
 #: — RDDs of 10^10 ranks won't stay memory-resident on real clusters,
 #: and a lost executor would otherwise force a full-lineage replay
 DISK_CHECKPOINT_NODES = 50_000_000
+
+
+def _local(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint(eager=True)
+
+
+def _snapshot_policy(spark, n_nodes: int, disk_checkpoint_nodes: int):
+    """The per-round snapshot for an ``n_nodes`` state: executor-memory
+    ``localCheckpoint`` up to ``disk_checkpoint_nodes``, above it the
+    RELIABLE checkpoint directory (a temp-dir default is set if none is
+    configured)."""
+    if n_nodes <= disk_checkpoint_nodes:
+        return _local
+    sc = spark.sparkContext
+    if sc.getCheckpointDir() is None:
+        sc.setCheckpointDir(os.path.join(tempfile.gettempdir(), "egs_pagerank_ckpt"))
+    return lambda df: df.checkpoint(eager=True)
+
+
+def _observed(df: DataFrame, snapshot, metrics: list) -> tuple[DataFrame, dict]:
+    """Snapshot ``df`` and return it with the named aggregate
+    ``metrics`` over its rows, observed by the snapshot's own job."""
+    obs = Observation()
+    return snapshot(df.observe(obs, *metrics)), obs.get
+
+
+def _links(
+    edges: DataFrame, src_col: str, dst_col: str, ins: bool = False
+) -> DataFrame:
+    """Adjacency rows of the self-loop-free link set for
+    :func:`_adjacency`: each edge gives its source a row with its
+    target in ``outs`` and its target a row (with the source in
+    ``ins`` when asked), so every endpoint is a node."""
+    e = edges.select(
+        F.col(src_col).alias("s"), F.col(dst_col).alias("d")
+    ).filter(F.col("s") != F.col("d"))
+    back = [F.col("s").alias("ins")] if ins else []
+    fwd = e.select(F.col("s").alias("node"), F.col("d").alias("outs"))
+    return fwd.unionByName(
+        e.select(F.col("d").alias("node"), *back), allowMissingColumns=True
+    )
+
+
+def _adjacency(rows: DataFrame, arrays: tuple, *metrics) -> tuple[DataFrame, dict]:
+    """Setup snapshot: one row per node with each of the ``arrays``
+    columns of ``rows`` gathered into its set of non-null values
+    (deduplicated map-side), plus the observed node count ``n`` and
+    any other ``metrics``. Always a local snapshot — the node count
+    that picks the round policy is only known after it."""
+    adj = rows.groupBy("node").agg(*[F.collect_set(a).alias(a) for a in arrays])
+    return _observed(adj, _local, [F.count(F.lit(1)).alias("n"), *metrics])
+
+
+def _carry(*arrays: str) -> list:
+    """Round aggregates that pass adjacency arrays through unchanged:
+    each node's one keep-row value, ``flatten(collect_list)``."""
+    return [F.flatten(F.collect_list(a)).alias(a) for a in arrays]
+
+
+def _push(along: str, value) -> list:
+    """Message rows of a round: ``value`` sent to every node of the
+    state row's array column ``along``."""
+    return [F.explode(along).alias("node"), value.alias("_m")]
+
+
+def _round(
+    state: DataFrame, push: list, aggs: list, metrics: list, snapshot
+) -> tuple[DataFrame, dict]:
+    """One round as ONE shuffle. The ``push`` message rows (node, _m)
+    are unioned with the state rows themselves (the keep rows, ``_m``
+    null) and a single node-keyed hash aggregate computes the next
+    state's ``aggs`` over the union: ``F.sum("_m")`` is the pushed
+    total (null when nothing arrived), ``F.sum(c)`` of a state scalar
+    its keep-row value, exactly, and :func:`_carry` passes the arrays
+    on. Returns the snapshot and its observed ``metrics``.
+
+    The caller builds the columns once and rebuilds per round only the
+    ones holding a round scalar: every column costs py4j round trips."""
+    rows = state.unionByName(state.select(*push), allowMissingColumns=True)
+    return _observed(rows.groupBy("node").agg(*aggs), snapshot, metrics)
+
+
+def _rank_rounds(state, iters, step, dang, snapshot, tol=None):
+    """Power iteration shared by :func:`pagerank` and
+    :func:`pagerank_personalized`: ``state`` is (node, outs, pr), each
+    round pushes pr/outdeg along ``outs`` and sets
+    ``pr = step(contrib, dang)`` from the pushed total and the previous
+    round's observed dangling mass. With ``tol`` the keep row also
+    carries the old rank (``prev``) so the L1 delta is observed on the
+    same snapshot; reaching it returns early, exhausting ``iters``
+    raises."""
+    push = _push("outs", F.col("pr") / F.size("outs"))
+    contrib = F.coalesce(F.sum("_m"), F.lit(0.0))
+    keep = _carry("outs")
+    metrics = [
+        F.coalesce(
+            F.sum(F.when(F.size("outs") == 0, F.col("pr"))), F.lit(0.0)
+        ).alias("dang")
+    ]
+    if tol is not None:
+        keep.append(F.sum("pr").alias("prev"))
+        metrics.append(F.sum(F.abs(F.col("pr") - F.col("prev"))).alias("delta"))
+    for _ in range(iters):
+        aggs = [*keep, step(contrib, F.lit(dang)).alias("pr")]
+        state, m = _round(state, push, aggs, metrics, snapshot)
+        dang = m["dang"]
+        if tol is not None and m["delta"] < tol:
+            return state
+    if tol is not None:
+        raise RuntimeError(
+            f"pagerank did not reach tol={tol} within {iters} iterations"
+        )
+    return state
 
 
 def pagerank(
@@ -62,110 +166,50 @@ def pagerank(
     checkable against the same unrolled recurrence), uniform dangling-
     mass redistribution, self-loops and duplicate edges removed.
 
-    Per iteration: contrib(dst) = Σ_{src→dst} pr(src)/outdeg(src) is a
-    src-keyed broadcast-free hash join + dst-keyed aggregation; the
-    dangling mass is ONE scalar aggregate joined back via a 1-row
-    crossJoin (broadcast by construction). Returns (node, pr) with pr
-    summing to 1 over the node universe src ∪ dst.
+    Per iteration, one :func:`_round`: every node pushes pr/outdeg
+    along its out-array, and the node-keyed aggregate sets
+    pr = (1−d)/n + d·(contrib + dang/n); the dangling mass ``dang`` is
+    observed on the previous round's snapshot. Returns (node, pr) with
+    pr summing to 1 over the node universe src ∪ dst.
 
     Convergence mode: with ``tol`` set, iteration stops early once the
-    L1 rank delta Σ|pr_new − pr_old| falls below ``tol`` (one extra
-    scalar aggregate per round — cheap next to the contribution join);
-    ``iters`` becomes the maximum, and exhausting it without reaching
-    ``tol`` raises loudly (same non-convergence contract as
-    ``dedup.connected_components``).
+    L1 rank delta Σ|pr_new − pr_old| falls below ``tol`` (observed on
+    the same snapshot — no extra job); ``iters`` becomes the maximum,
+    and exhausting it without reaching ``tol`` raises loudly (same
+    non-convergence contract as ``dedup.connected_components``).
 
     Lineage: ranks are re-checkpointed each round so round N never
     replays rounds 1..N−1. Below ``disk_checkpoint_nodes`` that is an
     eager ``localCheckpoint`` (executor memory); above it the snapshot
     goes to the RELIABLE checkpoint directory — 10^10-node rank RDDs
     neither fit in executor memory nor should vanish with one lost
-    executor (sets a spark.sql.warehouse-adjacent default checkpoint
-    dir if none is configured).
+    executor (sets a temp-dir default checkpoint dir if none is
+    configured).
     """
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    adj, m = _adjacency(
+        _links(edges, src_col, dst_col),
+        ("outs",),
+        F.count_if(F.size("outs") == 0).alias("dangling"),
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = nodes.count()
-    spark = edges.sparkSession
-    use_disk = n_nodes > disk_checkpoint_nodes
-    if use_disk and spark.sparkContext.getCheckpointDir() is None:
-        import os
-        import tempfile
-
-        spark.sparkContext.setCheckpointDir(
-            os.path.join(tempfile.gettempdir(), "egs_pagerank_ckpt")
-        )
-
-    def _snapshot(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if use_disk else df.localCheckpoint(
-            eager=True
-        )
-    if n_nodes == 0:
+    n = m["n"]
+    if n == 0:
         # empty graph (no edges, or self-loops only): empty result with
         # the right schema, not a ZeroDivisionError
-        return nodes.select("node", F.lit(0.0).alias("pr"))
-    deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("pr"))
-    base = (1.0 - damping) / n_nodes
-    for _ in range(iters):
-        with_deg = ranks.join(deg, ranks.node == deg.src, "left")
-        contrib = (
-            e.join(
-                with_deg.filter(F.col("outdeg").isNotNull()).select(
-                    "node", (F.col("pr") / F.col("outdeg")).alias("share")
-                ),
-                e.src == F.col("node"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("share").alias("contrib"))
-        )
-        dangling = with_deg.filter(F.col("outdeg").isNull()).agg(
-            F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dang")
-        )
-        new_ranks = _snapshot(
-            nodes.join(contrib, nodes.node == contrib.dst, "left")
-            .crossJoin(dangling)
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("dang") / F.lit(float(n_nodes))
-                    )
-                ).alias("pr"),
-            )
-        )
-        if tol is not None:
-            delta = (
-                new_ranks.alias("n")
-                .join(ranks.alias("o"), "node")
-                .agg(
-                    F.sum(F.abs(F.col("n.pr") - F.col("o.pr"))).alias("d")
-                )
-                .collect()[0]["d"]
-            )
-            ranks = new_ranks
-            if delta < tol:
-                return ranks
-        else:
-            ranks = new_ranks
-    if tol is not None:
-        raise RuntimeError(
-            f"pagerank did not reach tol={tol} within {iters} iterations"
-        )
-    return ranks
+        return adj.select("node", F.lit(0.0).alias("pr"))
+    base, d, nf = F.lit((1.0 - damping) / n), F.lit(damping), F.lit(float(n))
+
+    def step(contrib, dang):
+        return base + d * (contrib + dang / nf)
+
+    ranks = _rank_rounds(
+        adj.select("node", "outs", F.lit(1.0 / n).alias("pr")),
+        iters,
+        step,
+        m["dangling"] * (1.0 / n),
+        _snapshot_policy(edges.sparkSession, n, disk_checkpoint_nodes),
+        tol,
+    )
+    return ranks.select("node", "pr")
 
 
 def triangle_count(
@@ -276,86 +320,41 @@ def hits(
     good authorities — the directory-page vs content-page split a
     crawl-curation stage uses.
 
-    Per half-step: one edge⋈score hash join + one node-keyed agg; the
-    L1 total is a 1-row aggregate crossJoined back (broadcast by
-    construction). Nodes without out-edges get hub 0, without
-    in-edges authority 0. Lineage is truncated per round exactly like
-    ``pagerank``.
+    Each half-step is one :func:`_round` over (node, outs, ins): the
+    hub step pushes the normalized authority back along ``ins``, the
+    authority step pushes the normalized hub along ``outs``. Each
+    snapshot holds the raw (unnormalized) sums ``r``; their L1 total is
+    observed on it and divides them as a literal in the next push, and
+    the authority step's keep row carries the normalized hub to the
+    output. Nodes without out-edges get hub 0, without in-edges
+    authority 0. Lineage and snapshot policy as ``pagerank``.
     """
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        return nodes.select(
+    arrays = ("outs", "ins")
+    state, m = _adjacency(_links(edges, src_col, dst_col, ins=True), arrays)
+    n = m["n"]
+    if n == 0:
+        return state.select(
             "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")
         )
     if iters < 1:
         raise ValueError("hits requires iters >= 1")
-    # same snapshot policy as pagerank: 10^10-score RDDs go to the
-    # reliable checkpoint dir, not executor memory
-    spark = edges.sparkSession
-    use_disk = n_nodes > disk_checkpoint_nodes
-    if use_disk and spark.sparkContext.getCheckpointDir() is None:
-        import os
-        import tempfile
-
-        spark.sparkContext.setCheckpointDir(
-            os.path.join(tempfile.gettempdir(), "egs_pagerank_ckpt")
-        )
-
-    def _snapshot(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if use_disk else df.localCheckpoint(
-            eager=True
-        )
-    auth = nodes.select("node", F.lit(1.0).alias("a"))
-    hub = None
+    snapshot = _snapshot_policy(edges.sparkSession, n, disk_checkpoint_nodes)
+    keep, raw = _carry(*arrays), F.sum("_m").alias("r")
+    total = [F.sum("r").alias("t")]
+    pushed, kept = F.coalesce("r", F.lit(0.0)), F.coalesce(F.sum("r"), F.lit(0.0))
+    auth = F.lit(1.0)
     for _ in range(iters):
-        h_raw = (
-            e.join(auth, e.dst == auth.node)
-            .groupBy("src")
-            .agg(F.sum("a").alias("v"))
+        state, m = _round(state, _push("ins", auth), [*keep, raw], total, snapshot)
+        t = F.lit(m["t"])
+        state, m = _round(
+            state,
+            _push("outs", pushed / t),
+            [*keep, (kept / t).alias("hub"), raw],
+            total,
+            snapshot,
         )
-        h_tot = h_raw.agg(F.sum("v").alias("s"))
-        hub = (
-            nodes.join(h_raw, nodes.node == h_raw.src, "left")
-            .crossJoin(h_tot)
-            .select(
-                "node",
-                (F.coalesce("v", F.lit(0.0)) / F.col("s")).alias("h"),
-            )
-        )
-        # only auth carries across rounds — hub's lineage is bounded
-        # (one half-step off the checkpointed auth), so snapshotting
-        # auth alone halves the blocking jobs per iteration
-        a_raw = (
-            e.join(hub, e.src == hub.node)
-            .groupBy("dst")
-            .agg(F.sum("h").alias("v"))
-        )
-        a_tot = a_raw.agg(F.sum("v").alias("s"))
-        auth = (
-            nodes.join(a_raw, nodes.node == a_raw.dst, "left")
-            .crossJoin(a_tot)
-            .select(
-                "node",
-                (F.coalesce("v", F.lit(0.0)) / F.col("s")).alias("a"),
-            )
-        )
-        auth = _snapshot(auth)
-    return (
-        hub.join(auth, "node")
-        .select("node", F.col("h").alias("hub"), F.col("a").alias("auth"))
-    )
+        auth = pushed / F.lit(m["t"])
+    return state.select("node", "hub", auth.alias("auth"))
 
 
 def shortest_hops(
@@ -370,12 +369,14 @@ def shortest_hops(
     REACHABLE nodes only.
 
     Per round: ONE frontier⋈edges hash join + an anti-join against the
-    settled set, both keyed on node; the settled set re-checkpoints per
-    round (same lineage policy as ``pagerank``/``connected_components``).
-    O(diameter) blocking rounds — the standard distributed-BFS shape;
-    label-correcting variants trade that for more shuffled volume.
-    Exhausting ``max_iters`` with a non-empty frontier raises loudly
-    (same non-convergence contract as connected_components).
+    settled set, both keyed on node; the frontier's row count is
+    observed on its own snapshot (no separate emptiness job) and the
+    settled set re-checkpoints per round (same lineage policy as
+    ``pagerank``/``connected_components``). O(diameter) blocking
+    rounds — the standard distributed-BFS shape; label-correcting
+    variants trade that for more shuffled volume. Exhausting
+    ``max_iters`` with a non-empty frontier raises loudly (same
+    non-convergence contract as connected_components).
     """
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -388,15 +389,17 @@ def shortest_hops(
         [(source, 0)], schema="node long, hop int"
     ).localCheckpoint(eager=True)
     frontier = dist.select("node")
+    size = [F.count(F.lit(1)).alias("n")]
     for i in range(1, max_iters + 1):
-        nxt = (
+        nxt, m = _observed(
             frontier.join(e, frontier.node == e.src)
             .select(F.col("dst").alias("node"))
             .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
+            .join(dist.select("node"), "node", "left_anti"),
+            _local,
+            size,
         )
-        if nxt.rdd.isEmpty():
+        if m["n"] == 0:
             return dist
         dist = dist.union(
             nxt.select("node", F.lit(i).cast("int").alias("hop"))
@@ -419,64 +422,38 @@ def pagerank_personalized(
     SEED set instead of uniformly — rank mass measures proximity to
     the seeds, the crawl-curation primitive for 'pages like these'.
     Fixed iterations, deterministic; dangling mass also restarts at
-    the seeds (standard PPR). Same per-round join+agg+checkpoint shape
-    as ``pagerank``; kept separate so the uniform path's pinned float
-    expression order is untouched.
+    the seeds (standard PPR). Same one-shuffle rounds as ``pagerank``
+    (shared power iteration); only the step differs,
+    pr = (1−d)·rst + d·(contrib + dang·rst), so the uniform path's
+    pinned float expression order is untouched.
     """
     if not seeds:
         raise ValueError("pagerank_personalized requires a non-empty seed set")
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if nodes.count() == 0:
-        return nodes.select("node", F.lit(0.0).alias("pr"))
     rst = F.when(
         F.col("node").isin([int(s) for s in seeds]),
         F.lit(1.0 / len(seeds)),
     ).otherwise(F.lit(0.0))
-    deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    ranks = nodes.select("node", rst.alias("pr"))
-    for _ in range(iters):
-        with_deg = ranks.join(deg, ranks.node == deg.src, "left")
-        contrib = (
-            e.join(
-                with_deg.filter(F.col("outdeg").isNotNull()).select(
-                    "node", (F.col("pr") / F.col("outdeg")).alias("share")
-                ),
-                e.src == F.col("node"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("share").alias("contrib"))
-        )
-        dangling = with_deg.filter(F.col("outdeg").isNull()).agg(
-            F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dang")
-        )
-        ranks = (
-            nodes.join(contrib, nodes.node == contrib.dst, "left")
-            .crossJoin(dangling)
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * rst
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("dang") * rst
-                    )
-                ).alias("pr"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
+    adj, m = _adjacency(
+        _links(edges, src_col, dst_col),
+        ("outs",),
+        F.coalesce(F.sum(F.when(F.size("outs") == 0, rst)), F.lit(0.0)).alias("dang"),
+    )
+    if m["n"] == 0:
+        return adj.select("node", F.lit(0.0).alias("pr"))
+
+    teleport, d = F.lit(1.0 - damping) * rst, F.lit(damping)
+
+    def step(contrib, dang):
+        return teleport + d * (contrib + dang * rst)
+
+    ranks = _rank_rounds(
+        adj.select("node", "outs", rst.alias("pr")),
+        iters,
+        step,
+        m["dang"],
+        _snapshot_policy(edges.sparkSession, m["n"], DISK_CHECKPOINT_NODES),
+    )
+    return ranks.select("node", "pr")
 
 
 def cc_star(
@@ -526,41 +503,40 @@ def cc_star(
         .localCheckpoint(eager=True)
     )
     converged = False
-    with coarse_iter_shuffles(edges.sparkSession):
-        for _ in range(max_rounds):
-            # large-star over the full (undirected) neighborhood
-            und = e.union(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            mins = (
-                und.groupBy("u")
-                .agg(F.min("v").alias("mv"))
-                .select("u", F.least("mv", "u").alias("m"))
-            )
-            large = (
-                und.filter(F.col("v") > F.col("u"))
-                .join(mins, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .distinct()
-            )
-            # small-star on the (big → small)-oriented large-star output
-            mins_s = large.groupBy("u").agg(F.min("v").alias("m"))
-            with_min = large.join(mins_s, "u")
-            small = (
-                with_min.select(F.col("v").alias("n"), F.col("m"))
-                .union(with_min.select(F.col("u").alias("n"), F.col("m")))
-                .filter(F.col("n") != F.col("m"))
-                .select(F.col("n").alias("u"), F.col("m").alias("v"))
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                small.exceptAll(e).union(e.exceptAll(small)).limit(1).count()
-            )
-            e = small
-            if changed == 0:
-                converged = True
-                break
+    for _ in range(max_rounds):
+        # large-star over the full (undirected) neighborhood
+        und = e.union(
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        mins = (
+            und.groupBy("u")
+            .agg(F.min("v").alias("mv"))
+            .select("u", F.least("mv", "u").alias("m"))
+        )
+        large = (
+            und.filter(F.col("v") > F.col("u"))
+            .join(mins, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .distinct()
+        )
+        # small-star on the (big → small)-oriented large-star output
+        mins_s = large.groupBy("u").agg(F.min("v").alias("m"))
+        with_min = large.join(mins_s, "u")
+        small = (
+            with_min.select(F.col("v").alias("n"), F.col("m"))
+            .union(with_min.select(F.col("u").alias("n"), F.col("m")))
+            .filter(F.col("n") != F.col("m"))
+            .select(F.col("n").alias("u"), F.col("m").alias("v"))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        changed = (
+            small.exceptAll(e).union(e.exceptAll(small)).limit(1).count()
+        )
+        e = small
+        if changed == 0:
+            converged = True
+            break
     if not converged:
         raise RuntimeError(
             f"cc_star did not converge in {max_rounds} rounds — raise "

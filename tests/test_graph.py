@@ -389,3 +389,80 @@ def test_label_propagation_two_cliques_bridge(spark):
         ).collect()
     }
     assert got2 == got
+
+
+def _jobs(spark, run):
+    """Spark jobs issued by ``run()``, counted by job group (re-read
+    until the asynchronously updated status store settles)."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    seen = -1
+    while True:
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        if n == seen:
+            return n
+        seen = n
+        time.sleep(0.2)
+
+
+def test_pagerank_and_hits_rounds_are_one_shuffle(spark):
+    """Every round is one snapshot of one shuffle: one more PageRank
+    iteration (fixed or ``tol`` mode) costs at most 2 Spark jobs, one
+    more HITS iteration (two half-step snapshots) at most 4 — the
+    convergence scalars ride the snapshot's own job."""
+    import pytest
+
+    rng = np.random.default_rng(17)
+    edges = [
+        (int(a), int(b))
+        for a, b in zip(rng.integers(0, 30, 120), rng.integers(0, 30, 120))
+    ]
+    df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
+
+    def unconverged(k):
+        with pytest.raises(RuntimeError, match="did not reach"):
+            graph.pagerank(df, iters=k, tol=0.0)
+
+    for run, per_iter in (
+        (lambda k: graph.pagerank(df, iters=k).collect(), 2),
+        (unconverged, 2),
+        (lambda k: graph.hits(df, iters=k).collect(), 4),
+    ):
+        jobs = [_jobs(spark, lambda: run(k)) for k in (3, 4)]
+        assert jobs[1] - jobs[0] <= per_iter, jobs
+
+
+def test_hits_disk_checkpoint_path(spark, monkeypatch):
+    """Above the node threshold every HITS half-step snapshot goes
+    through the RELIABLE checkpoint (disk) path and the result is still
+    the exact fixed-iteration recurrence."""
+    edges = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 1), (4, 2)]
+    df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
+    cls = type(df)
+    reliable = cls.checkpoint
+    calls = []
+
+    def counting(self, eager=True):
+        calls.append(eager)
+        return reliable(self, eager)
+
+    monkeypatch.setattr(cls, "checkpoint", counting)
+    got = {
+        r.node: (r.hub, r.auth)
+        for r in graph.hits(df, iters=4, disk_checkpoint_nodes=2).collect()
+    }
+    assert len(calls) == 2 * 4
+    ref = ref_hits(edges, iters=4)
+    assert set(got) == set(ref)
+    for v in ref:
+        assert abs(got[v][0] - ref[v][0]) < 1e-12
+        assert abs(got[v][1] - ref[v][1]) < 1e-12
+    assert spark.sparkContext.getCheckpointDir() is not None
