@@ -3,9 +3,9 @@ a crawl pipeline: PageRank-style authority scoring feeds the same
 corpus-selection stage as the quality scores in textops).
 
 The fixpoint loops — ``pagerank`` (fixed or ``tol`` mode),
-``pagerank_personalized``, ``hits`` and
-``dedup.connected_components`` — share one round driver,
-:func:`_round`:
+``pagerank_personalized``, ``hits``, ``shortest_hops``,
+``label_propagation`` and ``dedup.connected_components`` — share one
+round driver, :func:`_round`:
 
 * setup snapshots the deduplicated, self-loop-free adjacency once, one
   row per node: ``(node, outs[, ins])`` (:func:`_adjacency`); the node
@@ -17,12 +17,15 @@ The fixpoint loops — ``pagerank`` (fixed or ``tol`` mode),
   state instead of being re-read;
 * the aggregate is snapshotted (eager ``localCheckpoint``, so round N
   never replays rounds 1..N−1), and the round's scalars — dangling
-  mass, L1 totals, L1 delta, changed-label count — come from an
-  ``Observation`` on that snapshot, delivered by the snapshot's own job
-  and fed to the next round as literals.
+  mass, L1 totals, L1 delta, changed-label and newly-reached counts —
+  come from an ``Observation`` on that snapshot, delivered by the
+  snapshot's own job and fed to the next round as literals.
 
 A round is therefore two Spark jobs (shuffle map stage + snapshot) and
-the driver holds nothing beyond a few scalars per round.
+the driver holds nothing beyond a few scalars per round. ``cc_star``
+keeps its own large-star/small-star rounds (joins, O(log n) of them)
+but reads its convergence count the same way, from an ``Observation``
+delivered by the round's snapshot job.
 """
 
 from __future__ import annotations
@@ -366,45 +369,38 @@ def shortest_hops(
 ) -> DataFrame:
     """Directed BFS hop distance from ``source`` — frontier expansion,
     the crawl-depth / link-distance primitive. Returns (node, hop) for
-    REACHABLE nodes only.
+    REACHABLE nodes only; ``(source, 0)`` always, even without edges.
 
-    Per round: ONE frontier⋈edges hash join + an anti-join against the
-    settled set, both keyed on node; the frontier's row count is
-    observed on its own snapshot (no separate emptiness job) and the
-    settled set re-checkpoints per round (same lineage policy as
-    ``pagerank``/``connected_components``). O(diameter) blocking
-    rounds — the standard distributed-BFS shape; label-correcting
-    variants trade that for more shuffled volume. Exhausting
-    ``max_iters`` with a non-empty frontier raises loudly (same
-    non-convergence contract as connected_components).
+    The state is (node, outs, hop), hop null until reached. Round i is
+    one :func:`_round`: only the frontier (hop = i−1) pushes ``i``
+    along ``outs`` and a node keeps its hop or takes the smallest one
+    pushed to it; the newly reached count (hop = i) is observed on the
+    round's snapshot and 0 ends the search. O(diameter) rounds of two
+    jobs each. The keep rows ship the whole adjacency every round, not
+    just the frontier's edges: frontier-proportional shuffle volume
+    traded for job count. Exhausting ``max_iters`` with a non-empty
+    frontier raises loudly (same non-convergence contract as
+    connected_components).
     """
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    start = edges.sparkSession.createDataFrame([(source,)], "node long")
+    state, _ = _adjacency(
+        _links(edges, src_col, dst_col).unionByName(
+            start, allowMissingColumns=True
+        ),
+        ("outs",),
     )
-    spark = edges.sparkSession
-    dist = spark.createDataFrame(
-        [(source, 0)], schema="node long, hop int"
-    ).localCheckpoint(eager=True)
-    frontier = dist.select("node")
-    size = [F.count(F.lit(1)).alias("n")]
+    hop = F.col("hop")
+    state = state.select(
+        "node", "outs", F.when(F.col("node") == source, F.lit(0)).alias("hop")
+    )
+    aggs = [*_carry("outs"), F.coalesce(F.min("hop"), F.min("_m")).alias("hop")]
     for i in range(1, max_iters + 1):
-        nxt, m = _observed(
-            frontier.join(e, frontier.node == e.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(dist.select("node"), "node", "left_anti"),
-            _local,
-            size,
+        push = _push(F.when(hop == i - 1, F.col("outs")), F.lit(i))
+        state, m = _round(
+            state, push, aggs, [F.count_if(hop == i).alias("n")], _local
         )
         if m["n"] == 0:
-            return dist
-        dist = dist.union(
-            nxt.select("node", F.lit(i).cast("int").alias("hop"))
-        ).localCheckpoint(eager=True)
-        frontier = nxt
+            return state.filter(hop.isNotNull()).select("node", "hop")
     raise RuntimeError(
         f"shortest_hops frontier still non-empty after {max_iters} rounds"
     )
@@ -474,11 +470,16 @@ def cc_star(
     m = min(N(u) ∪ {u}); small-star (on the (big → small)-oriented
     result) hangs u and its smaller neighbors onto their minimum. Each
     half-round is one node-keyed aggregation + one node-keyed join —
-    two shuffles — with no driver-side state; convergence is one
-    count over a symmetric ``exceptAll`` diff per round (empty diff ⇔
-    the oriented edge set is a fixpoint of both steps ⇔ every node
-    points directly at its component minimum). Lineage is truncated
-    per round with ``localCheckpoint`` like :func:`pagerank`.
+    two shuffles — with no driver-side state, and the round's result
+    is snapshotted (``localCheckpoint``) like :func:`pagerank`.
+
+    Convergence rides the snapshot's own job: an ``Observation`` on
+    the large-star per-node aggregate counts the nodes with a smaller
+    neighbor and more than one neighbor. Zero means the round's input
+    edge set is a star forest centred on the component minima — every
+    node points directly at its component minimum — and a star forest
+    is a fixpoint of both steps, so the labels are final: the same
+    round the edge set stops changing.
 
     Returns (node, component) for every node incident to an edge,
     component = min reachable node id. Raises if not converged in
@@ -494,23 +495,30 @@ def cc_star(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    e = (
+    e, m = _observed(
         raw.filter(F.col("x") != F.col("y"))
         .select(
             F.greatest("x", "y").alias("u"), F.least("x", "y").alias("v")
         )
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        _local,
+        [F.count(F.lit(1)).alias("n")],
     )
-    converged = False
+    if m["n"] == 0:
+        # no edges: every node is its own component (and there is no
+        # large-star aggregate to observe)
+        return universe.select("node", F.col("node").alias("component"))
+    unstarred = F.count_if((F.col("mv") < F.col("u")) & (F.col("deg") > 1))
     for _ in range(max_rounds):
         # large-star over the full (undirected) neighborhood
         und = e.union(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
+        obs = Observation()
         mins = (
             und.groupBy("u")
-            .agg(F.min("v").alias("mv"))
+            .agg(F.min("v").alias("mv"), F.count("v").alias("deg"))
+            .observe(obs, unstarred.alias("n"))
             .select("u", F.least("mv", "u").alias("m"))
         )
         large = (
@@ -522,29 +530,23 @@ def cc_star(
         # small-star on the (big → small)-oriented large-star output
         mins_s = large.groupBy("u").agg(F.min("v").alias("m"))
         with_min = large.join(mins_s, "u")
-        small = (
+        e = _local(
             with_min.select(F.col("v").alias("n"), F.col("m"))
             .union(with_min.select(F.col("u").alias("n"), F.col("m")))
             .filter(F.col("n") != F.col("m"))
             .select(F.col("n").alias("u"), F.col("m").alias("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        changed = (
-            small.exceptAll(e).union(e.exceptAll(small)).limit(1).count()
-        )
-        e = small
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"cc_star did not converge in {max_rounds} rounds — raise "
-            "max_rounds (log2(nodes) + slack is sufficient)"
-        )
-    labels = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    return universe.join(labels, "node", "left").select(
-        "node", F.coalesce("component", "node").alias("component")
+        if obs.get["n"] == 0:
+            labels = e.select(
+                F.col("u").alias("node"), F.col("v").alias("component")
+            )
+            return universe.join(labels, "node", "left").select(
+                "node", F.coalesce("component", "node").alias("component")
+            )
+    raise RuntimeError(
+        f"cc_star did not converge in {max_rounds} rounds — raise "
+        "max_rounds (log2(nodes) + slack is sufficient)"
     )
 
 
@@ -565,40 +567,24 @@ def label_propagation(
     choice and the oracle-checkable one — the result is whatever
     state round N reaches, exactly.
 
-    Per round: one node-keyed edge⋈label join, one (node, label)
-    count, one argmax-pick agg (min over (-cnt, label) structs — all
-    integer arithmetic, no floats anywhere); lineage truncated per
-    round like ``pagerank``. Returns (node, label)."""
-    a, b = F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-    und = (
-        edges.select(a, b)
-        .union(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    The state is (node, nbrs, label), the adjacency built from both
+    edge directions. Each round is one :func:`_round`: every node
+    pushes its label along ``nbrs`` and the node-keyed aggregate takes
+    ``mode(_m, deterministic=True)`` — the most frequent pushed label,
+    lowest on ties, all integer. Returns (node, label)."""
+    both = edges.select(src_col, dst_col).union(
+        edges.select(F.col(dst_col).alias(src_col), F.col(src_col).alias(dst_col))
     )
-    labels = und.select(F.col("a").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
+    adj, _ = _adjacency(_links(both, src_col, dst_col), ("outs",))
+    state = adj.select(
+        "node", F.col("outs").alias("nbrs"), F.col("node").alias("label")
     )
+    push = _push("nbrs", F.col("label"))
+    aggs = [*_carry("nbrs"), F.mode("_m", True).alias("label")]
+    size = [F.count(F.lit(1)).alias("n")]  # fixed rounds: nothing to observe
     for _ in range(rounds):
-        nb = und.join(labels, und["b"] == labels["node"]).select(
-            F.col("a").alias("node"), "label"
-        )
-        cnt = nb.groupBy("node", "label").agg(F.count("*").alias("cnt"))
-        labels = (
-            cnt.groupBy("node")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("cnt")).alias("nc"),
-                        F.col("label").alias("lbl"),
-                    )
-                ).alias("pick")
-            )
-            .select("node", F.col("pick.lbl").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-    return labels
+        state, _ = _round(state, push, aggs, size, _local)
+    return state.select("node", "label")
 
 
 def random_walks(

@@ -77,18 +77,6 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _SPREAD_MIN_BYTES = 2 * 1024 * 1024
 
 
-def _input_bytes(path: str) -> int:
-    import os
-
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if not f.startswith((".", "_"))
-        )
-    return os.path.getsize(path)
-
-
 def _read_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """_read + spread across all cores for CPU-heavy map-side work.
 
@@ -103,13 +91,13 @@ def _read_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     SIZE-ADAPTIVE (guide §2: derive partitioning from input size, not a
     constant): below ``_SPREAD_MIN_BYTES`` of compressed input the
     shuffle's fixed cost exceeds the parallelism gain and the plain
-    scan is returned unchanged."""
+    scan is returned unchanged. The size is Catalyst's own estimate of
+    the scan (the on-disk file bytes), so the gate holds on any
+    filesystem the reader does."""
     df = _read(spark, sf_dir, name)
-    try:
-        if _input_bytes(f"{sf_dir}/{name}.parquet") < _SPREAD_MIN_BYTES:
-            return df
-    except OSError:
-        pass
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if size < _SPREAD_MIN_BYTES:
+        return df
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 

@@ -63,12 +63,8 @@ def get_spark(
         # collapsing to one task instead of flooding the scheduler with
         # 32 near-empty tasks per stage (measured: a 1-byte floor cost
         # +0.5–3 s on ~15 small multi-stage queries; 64 KB keeps both
-        # regimes right). Scale-adaptive,
-        # not a local[32] constant; override via SPARK_GRAFT_AQE_MIN_PART.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PART", "64k"),
-        )
+        # regimes right). Scale-adaptive, not a local[32] constant.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
@@ -82,13 +78,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> dict:
-    """Read driver parquet tables and register them as temp views."""
-    out = {}
-    for n in names:
-        df = spark.read.parquet(f"{sf_dir}/{n}.parquet")
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out

@@ -415,9 +415,10 @@ def _jobs(spark, run):
 
 def test_pagerank_and_hits_rounds_are_one_shuffle(spark):
     """Every round is one snapshot of one shuffle: one more PageRank
-    iteration (fixed or ``tol`` mode) costs at most 2 Spark jobs, one
-    more HITS iteration (two half-step snapshots) at most 4 — the
-    convergence scalars ride the snapshot's own job."""
+    iteration (fixed or ``tol`` mode), label-propagation round or BFS
+    level (on a directed path one node longer) costs at most 2 Spark
+    jobs, one more HITS iteration (two half-step snapshots) at most 4 —
+    the convergence scalars ride the snapshot's own job."""
     import pytest
 
     rng = np.random.default_rng(17)
@@ -431,10 +432,17 @@ def test_pagerank_and_hits_rounds_are_one_shuffle(spark):
         with pytest.raises(RuntimeError, match="did not reach"):
             graph.pagerank(df, iters=k, tol=0.0)
 
+    def path(k):
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(k)], "src long, dst long"
+        )
+
     for run, per_iter in (
         (lambda k: graph.pagerank(df, iters=k).collect(), 2),
         (unconverged, 2),
         (lambda k: graph.hits(df, iters=k).collect(), 4),
+        (lambda k: graph.label_propagation(df, rounds=k).collect(), 2),
+        (lambda k: graph.shortest_hops(path(k), source=0).collect(), 2),
     ):
         jobs = [_jobs(spark, lambda: run(k)) for k in (3, 4)]
         assert jobs[1] - jobs[0] <= per_iter, jobs
@@ -466,3 +474,29 @@ def test_hits_disk_checkpoint_path(spark, monkeypatch):
         assert abs(got[v][0] - ref[v][0]) < 1e-12
         assert abs(got[v][1] - ref[v][1]) < 1e-12
     assert spark.sparkContext.getCheckpointDir() is not None
+
+
+def test_cc_star_round_count_on_512_path(spark):
+    """The convergence check stops at the first round whose input is a
+    star forest: the 512-node path converges with exactly 10 rounds and
+    raises with 9."""
+    import pytest
+
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(511)], "a long, b long"
+    ).coalesce(8)
+    got = {r.node: r.component for r in graph.cc_star(df, max_rounds=10).collect()}
+    assert got == {n: 0 for n in range(512)}
+    with pytest.raises(RuntimeError, match="did not converge in 9 rounds"):
+        graph.cc_star(df, max_rounds=9)
+
+
+def test_shortest_hops_source_without_edges(spark):
+    """A source with no edges of its own — absent from the graph, or
+    with only a self-loop — is still returned at hop 0, alone."""
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 7)], "src long, dst long"
+    )
+    for source in (9, 7):
+        got = [tuple(r) for r in graph.shortest_hops(df, source=source).collect()]
+        assert got == [(source, 0)], (source, got)

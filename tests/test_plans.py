@@ -636,3 +636,22 @@ def test_webmap_query_plan_shapes(spark):
     # window + within-segment dedup + final count: bounded exchanges
     assert p2.count("Exchange hashpartitioning") <= 3, p2
     assert "ArrowEvalPython" not in p2 and "BatchEvalPython" not in p2, p2
+
+
+def test_read_spread_size_gate_holds_on_file_uri(spark, monkeypatch):
+    """_read_spread gates its round-robin spread on the scan's size,
+    and the gate must not depend on the path being a plain local one:
+    a small table read through a ``file://`` URI plans no repartition,
+    exactly like the bare path, while lowering the threshold to 0 still
+    spreads it."""
+    from europe_gis_spark import queries
+    from conftest import SF_SMOKE
+
+    for sf in (SF_SMOKE, "file://" + SF_SMOKE):
+        p = plan_str(queries._read_spread(spark, sf, "documents"), mode="simple")
+        assert "RoundRobinPartitioning" not in p, p
+    monkeypatch.setattr(queries, "_SPREAD_MIN_BYTES", 0)
+    p = plan_str(
+        queries._read_spread(spark, "file://" + SF_SMOKE, "documents"), mode="simple"
+    )
+    assert "RoundRobinPartitioning" in p, p
