@@ -5,17 +5,21 @@ Spark-side shape of the reference's rasterize/overlay joins (SURVEY.md
 ``/root/reference/src/data_engineering/raster_processor.py:43-57``), so it
 is indexed once on the driver and broadcast; the trillion-row point side
 then (a) buckets by cell id with a plain column expression, (b) equi-joins
-or dict-probes the cover, (c) refines with vectorized point-in-polygon
+or probes the cover, (c) refines with vectorized point-in-polygon
 inside one Arrow-batched pandas UDF. No per-row Python anywhere.
 
-The index is deliberately a plain picklable object (dict[int, np.ndarray]
-+ ring arrays) — cheap to broadcast, unpickled once per executor worker
-process by Spark's broadcast machinery (SURVEY.md §7.4 risk 6).
+The cover is CSR: sorted unique ``cell_keys`` (int64), ``cell_offs``
+(int32, one longer) and flat ``cell_polys`` (int32 ordinals, ascending
+within a cell); cell k's candidates are
+``cell_polys[cell_offs[k]:cell_offs[k + 1]]``, and a batch probes it
+with one ``searchsorted``. The index is a plain picklable object (these
+arrays + ring arrays) — cheap to broadcast, unpickled once per executor
+worker process by Spark's broadcast machinery (SURVEY.md §7.4 risk 6).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -24,22 +28,15 @@ from . import cells, geom, wkb
 
 @dataclass
 class PolyIndex:
-    """cell id → candidate polygon ordinals, plus decoded geometries."""
+    """cell id → candidate polygon ordinals (CSR), plus decoded geometries."""
 
     poly_ids: list  # external ids (e.g. nuts_id strings), ordinal order
     parts: list  # decoded ring-lists per polygon, ordinal order
     res: int
-    cell_to_polys: dict = field(default_factory=dict)  # int -> np.ndarray[int32]
-    bboxes: np.ndarray | None = None  # (n,4) xmin,ymin,xmax,ymax
-
-    def candidates(self, cid: int) -> np.ndarray:
-        return self.cell_to_polys.get(int(cid), _EMPTY)
-
-    def n_cells(self) -> int:
-        return len(self.cell_to_polys)
-
-
-_EMPTY = np.empty(0, dtype=np.int32)
+    cell_keys: np.ndarray
+    cell_offs: np.ndarray
+    cell_polys: np.ndarray
+    bboxes: np.ndarray  # (n,4) xmin,ymin,xmax,ymax
 
 
 def build_index(
@@ -56,23 +53,29 @@ def build_index(
     poly_ids: list[str] = []
     parts_list: list = []
     bboxes = []
-    cell_map: dict[int, list[int]] = {}
+    covers: list[np.ndarray] = []
     for pid, buf in polygons:
         parts = wkb.polygon_parts(wkb.decode(buf))
         if validate and not geom.is_valid_polygon(parts):
             continue
-        ordinal = len(poly_ids)
         poly_ids.append(pid)
         parts_list.append(parts)
         bboxes.append(geom.geom_bbox(wkb.Geom(wkb.WKB_MULTIPOLYGON, parts)))
-        for cid in cells.cover_polygon(parts, res):
-            cell_map.setdefault(int(cid), []).append(ordinal)
-    packed = {k: np.array(v, dtype=np.int32) for k, v in cell_map.items()}
+        covers.append(cells.cover_polygon(parts, res))
+    flat = np.concatenate(covers) if covers else np.empty(0, dtype=np.int64)
+    ords = np.repeat(
+        np.arange(len(covers), dtype=np.int32), [len(c) for c in covers]
+    )
+    keys, counts = np.unique(flat, return_counts=True)
+    offs = np.zeros(len(keys) + 1, dtype=np.int32)
+    np.cumsum(counts, out=offs[1:])
     return PolyIndex(
         poly_ids=poly_ids,
         parts=parts_list,
         res=res,
-        cell_to_polys=packed,
+        cell_keys=keys,
+        cell_offs=offs,
+        cell_polys=ords[np.argsort(flat, kind="stable")],  # ascending per cell
         bboxes=np.array(bboxes) if bboxes else np.empty((0, 4)),
     )
 
@@ -98,46 +101,42 @@ def assign_points(
       * ``'all'`` — every covering polygon, one pair per hit
         (MergeAlg.add overlap counting, G3, ``:176-188``).
 
-    Vectorized per candidate polygon: points are grouped by cell, cells
-    by candidate set, then one ``points_in_polygon`` call per polygon over
-    all its candidate points.
+    One CSR probe finds every (point, candidate) pair, the pairs are
+    grouped by polygon with one stable sort, and each touched polygon
+    gets one ``points_in_polygon`` call over all its candidate points.
+    Pairs come back ordered by (row, ordinal).
     """
     if match not in ("last", "first", "all"):
         raise ValueError(f"match must be 'last'|'first'|'all', got {match!r}")
-    n = len(px)
-    if n == 0:
+    keys = idx.cell_keys
+    if len(px) == 0 or len(keys) == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int32)
     cid = cells.cell_id(px, py, idx.res)
-    # group candidate point-rows per polygon ordinal
-    per_poly: dict[int, list[np.ndarray]] = {}
-    uniq, inv = np.unique(cid, return_inverse=True)
-    for u_i, u in enumerate(uniq):
-        cands = idx.candidates(int(u))
-        if len(cands) == 0:
-            continue
-        rows = np.nonzero(inv == u_i)[0]
-        for p in cands:
-            per_poly.setdefault(int(p), []).append(rows)
-    out_rows: list[np.ndarray] = []
-    out_polys: list[np.ndarray] = []
-    for p, row_chunks in per_poly.items():
-        rows = np.concatenate(row_chunks)
-        hit = geom.points_in_polygon(px[rows], py[rows], idx.parts[p], boundary)
-        got = rows[hit]
-        if len(got):
-            out_rows.append(got)
-            out_polys.append(np.full(len(got), p, dtype=np.int32))
-    if not out_rows:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int32)
-    rows = np.concatenate(out_rows)
-    polys = np.concatenate(out_polys)
+    k = np.minimum(np.searchsorted(keys, cid), len(keys) - 1)
+    lo = idx.cell_offs[k]
+    cnt = np.where(keys[k] == cid, idx.cell_offs[k + 1] - lo, 0)
+    # (row, ordinal) pairs in row-major order: row i contributes its
+    # cell's slice cell_polys[lo_i : lo_i + cnt_i]
+    rows = np.repeat(np.arange(len(px), dtype=np.int64), cnt)
+    first = np.cumsum(cnt) - cnt
+    polys = idx.cell_polys[np.arange(len(rows)) + np.repeat(lo - first, cnt)]
+    by_poly = np.argsort(polys, kind="stable")
+    sp, sr = polys[by_poly], rows[by_poly]
+    starts = np.flatnonzero(np.diff(sp, prepend=-1))
+    hit_sorted = np.empty(len(sp), dtype=bool)
+    for s, e in zip(starts, np.r_[starts[1:], len(sp)]):
+        r = sr[s:e]
+        hit_sorted[s:e] = geom.points_in_polygon(
+            px[r], py[r], idx.parts[sp[s]], boundary
+        )
+    hit = np.empty(len(sp), dtype=bool)
+    hit[by_poly] = hit_sorted
+    rows, polys = rows[hit], polys[hit]
     if match != "all":
-        order = np.lexsort((polys, rows))  # by row, then ordinal asc
-        rows, polys = rows[order], polys[order]
         keep = np.ones(len(rows), dtype=bool)
         if match == "first":
             keep[1:] = rows[1:] != rows[:-1]
         else:  # 'last': keep the final (highest-ordinal) entry per row
             keep[:-1] = rows[:-1] != rows[1:]
         rows, polys = rows[keep], polys[keep]
-    return rows.astype(np.int64), polys
+    return rows, polys

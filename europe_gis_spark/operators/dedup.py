@@ -20,6 +20,7 @@ oracle reproduces signatures exactly.
 
 from __future__ import annotations
 
+from itertools import chain
 from typing import Iterator
 
 import numpy as np
@@ -456,45 +457,53 @@ def keep_flags(docs: DataFrame, components: DataFrame) -> DataFrame:
 
 SIMHASH_SCHEMA = "doc_id long, simhash long"
 
-_SHIFTS = np.arange(64, dtype=np.uint64)
-_POWERS = (np.uint64(1) << _SHIFTS).astype(np.uint64)
+#: byte value → one uint64 of eight one-byte bit counters; lane j holds
+#: bit (7 - j), the ``np.unpackbits`` order
+_LANES = np.unpackbits(
+    np.arange(256, dtype=np.uint8)[:, None], axis=1
+).view(np.uint64)[:, 0]
+_LANE_RUN = 255  # tokens per partial sum: a one-byte counter holds 255
+
+
+def simhash_counts(texts: list) -> tuple[np.ndarray, np.ndarray]:
+    """64-bit SimHash and whitespace-token count per document, from one
+    ``split()`` per text, vectorized over the whole Arrow batch.
+
+    Token hash = pandas' vectorized SipHash (``pd.util.hash_array``,
+    Cython over the whole token array — no per-token Python calls). Bit
+    j of a doc's hash is set iff the +1/−1 vote over its tokens is
+    positive (⇔ set-bit count > n_tokens/2). Each hash byte maps through
+    ``_LANES`` to eight byte-lane counters, so one ``np.add.reduceat``
+    over a (tokens, 8) uint64 array counts all 64 bits of every doc;
+    docs sum in runs of ≤ 255 tokens (no lane overflows), widened to
+    int32 before the runs are added. The bit → position mapping is the
+    FIXED ``np.unpackbits`` bijection, which is all SimHash needs. NB:
+    assembly is a bit pack, never arithmetic: a naive ``sum(1 << j …)``
+    promotes numpy uint64 through float64 and corrupts the low bits.
+    """
+    toks_per = [(t or "").split() for t in texts]
+    counts = np.fromiter(map(len, toks_per), dtype=np.int64, count=len(texts))
+    out = np.zeros(len(texts), dtype=np.int64)
+    nz = np.flatnonzero(counts)
+    if len(nz):
+        toks = np.asarray(list(chain.from_iterable(toks_per)), dtype=object)
+        lanes = _LANES[pd.util.hash_array(toks).view(np.uint8).reshape(-1, 8)]
+        c = counts[nz]
+        n_runs = (c + _LANE_RUN - 1) // _LANE_RUN
+        first = np.cumsum(n_runs) - n_runs
+        k = np.arange(n_runs.sum()) - np.repeat(first, n_runs)
+        starts = np.repeat(np.cumsum(c) - c, n_runs) + _LANE_RUN * k
+        seg = np.add.reduceat(lanes, starts, axis=0).view(np.uint8)
+        if len(seg) > len(c):
+            seg = np.add.reduceat(seg, first, axis=0, dtype=np.int32)
+        set_bit = seg > (c // 2)[:, None]  # vote > 0
+        packed = np.packbits(set_bit, axis=1, bitorder="little")
+        out[nz] = packed.view(np.int64)[:, 0]
+    return out, counts.astype(np.int32)
 
 
 def simhash_batch(texts: list) -> np.ndarray:
-    """64-bit SimHash per document, vectorized over the whole batch.
-
-    Token hash = pandas' vectorized SipHash (``pd.util.hash_array``,
-    Cython over the whole token array — no per-token Python calls; the
-    previous per-token ``hashlib.blake2b`` loop dominated the fused
-    geo-tag + metrics pass). Bit j of a doc's hash is set iff the +1/−1
-    vote over its tokens is positive (⇔ set-bit count > n_tokens/2).
-    One bit-matrix + one ``np.add.reduceat`` serves every document in
-    the Arrow batch — no per-document numpy allocations. NB: assembly
-    stays in uint64 throughout; a naive ``sum(1 << j …)`` promotes numpy
-    uint64 through float64 and silently corrupts the low bits.
-    """
-    toks_per = [(t or "").split() for t in texts]
-    counts = np.array([len(t) for t in toks_per], dtype=np.int64)
-    out = np.zeros(len(texts), dtype=np.int64)
-    nz = np.nonzero(counts)[0]
-    if len(nz) == 0:
-        return out
-    all_toks = [x for t in toks_per for x in t]
-    hs = pd.util.hash_array(np.asarray(all_toks, dtype=object)).astype(np.uint64)
-    # bit matrix via unpackbits on the raw bytes (uint8, C-speed) — the
-    # shift-based int32 expansion was 12x slower and 4x the memory; the
-    # bit→column mapping differs from plain shifts but simhash only
-    # needs a FIXED bijection, not a particular one
-    bits = np.unpackbits(hs.view(np.uint8).reshape(-1, 8), axis=1)
-    ends = np.cumsum(counts)
-    starts = ends - counts
-    seg = np.add.reduceat(bits, starts[nz], axis=0, dtype=np.int32)
-    set_bit = (2 * seg) > counts[nz][:, None]  # vote > 0
-    vals = (set_bit.astype(np.uint64) * _POWERS[None, :]).sum(
-        axis=1, dtype=np.uint64
-    )
-    out[nz] = vals.astype(np.int64)
-    return out
+    return simhash_counts(texts)[0]
 
 
 def simhash_one(text: str) -> np.int64:

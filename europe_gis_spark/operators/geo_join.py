@@ -2,8 +2,9 @@
 
 Pipeline (SURVEY.md §7.2 minimum slice):
 
-  pages scan → coordinate extraction (meta/text, Arrow-batched UDF)
-            → hostname-hint fallback (broadcast equi-join, J1)
+  pages scan → coordinate extraction (meta/text, JVM regex or Arrow UDF)
+            → hostname-hint fallback (a host → coordinate table carried
+              in the UDF closure, probed for the unresolved rows only)
             → LAEA projection + cell id (numpy in the same UDF pass)
             → point-in-polygon against the broadcast PolyIndex
               (cell probe + exact ray-cast refine, J6)
@@ -18,7 +19,9 @@ data_engineering/raster_processor.py:154-188, 269-291``) and PostGIS
 
 The broadcast index is probed inside pandas UDFs; Spark's broadcast
 machinery unpickles it once per Python worker process, not per task
-(SURVEY.md §7.4 risk 6).
+(SURVEY.md §7.4 risk 6). Each Arrow batch is handled array-at-a-time:
+one CSR probe of the index (``geo.index.assign_points``), one hint lookup
+over the rows still missing a coordinate, one gather for the poly ids.
 """
 
 from __future__ import annotations
@@ -40,6 +43,56 @@ RESOLVED_FIELDS = (
 )
 
 
+def _hint_table(host_hints: pd.DataFrame | None):
+    """host → (lat, lon) as a (hosts Index, (n, 2) array) pair, or None.
+    Small (≤ a few thousand hosts): it travels in the UDF closure. A
+    host listed twice keeps its last coordinate."""
+    if host_hints is None or not len(host_hints):
+        return None
+    hints = {r.host: (float(r.lat), float(r.lon)) for r in host_hints.itertuples()}
+    return pd.Index(list(hints), dtype=object), np.array(list(hints.values()))
+
+
+def _fill_from_hints(hints, url: pd.Series, lat: np.ndarray, lon: np.ndarray):
+    """Give each row without a coordinate its host's hint, in place, and
+    return the filled row positions. Hosts are parsed for those rows
+    only, and matched with one vectorized hash lookup."""
+    miss = np.flatnonzero(np.isnan(lat))
+    if hints is None or not len(miss):
+        return miss[:0]
+    hosts, coords = hints
+    pos = hosts.get_indexer(hx.host_series(url.iloc[miss]))
+    got = pos >= 0
+    rows, pos = miss[got], pos[got]
+    lat[rows], lon[rows] = coords[pos, 0], coords[pos, 1]
+    return rows
+
+
+def _py_coords(b: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(lat, lon) per row from the Python twins of the coordinate
+    regexes (``hx.extract_coords``); NaN where neither matches."""
+    lat = np.full(len(b), np.nan)
+    lon = np.full(len(b), np.nan)
+    for i, (h, t) in enumerate(zip(b["html"].tolist(), b["text"].tolist())):
+        got = hx.extract_coords(h, t)
+        if got is not None:
+            lat[i], lon[i] = got
+    return lat, lon
+
+
+def _poly_column(idx, names, x, y, boundary: str, match: str) -> np.ndarray:
+    """Object column of the polygon id covering each point (``None``
+    where unresolved or unmatched), filled with one gather."""
+    poly = np.full(len(x), None, dtype=object)
+    ok = np.flatnonzero(np.isfinite(x) & np.isfinite(y))
+    if len(ok):
+        rows, ords = gindex.assign_points(
+            idx, x[ok], y[ok], boundary=boundary, match=match
+        )
+        poly[ok[rows]] = names[ords]
+    return poly
+
+
 def resolve_pages(
     spark: SparkSession,
     pages: DataFrame,
@@ -50,15 +103,11 @@ def resolve_pages(
 
     One ``mapInPandas`` pass does extraction + projection + cell id —
     a single JVM↔Python Arrow crossing per batch. Hostname fallback is a
-    tiny dict carried inside the closure (broadcast by task serialization;
-    ≤ a few thousand entries) — rows with no signal keep nulls, they must
-    survive, not be dropped (FIXTURES.md §1).
+    tiny host table carried inside the closure (broadcast by task
+    serialization; ≤ a few thousand entries) — rows with no signal keep
+    nulls, they must survive, not be dropped (FIXTURES.md §1).
     """
-    hints = {}
-    if host_hints is not None and len(host_hints):
-        hints = {
-            r.host: (float(r.lat), float(r.lon)) for r in host_hints.itertuples()
-        }
+    hints = _hint_table(host_hints)
 
     # output only url + lang + computed fields — never ship the html
     # payload back through Arrow
@@ -66,23 +115,9 @@ def resolve_pages(
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            n = len(b)
-            lat = np.full(n, np.nan)
-            lon = np.full(n, np.nan)
-            method = np.array([None] * n, dtype=object)
-            htmls = b["html"].tolist()
-            texts = b["text"].tolist()
-            for i in range(n):
-                got = hx.extract_coords(htmls[i], texts[i])
-                if got is not None:
-                    lat[i], lon[i] = got
-                    method[i] = "inline"
-            if hints:
-                hosts = hx.host_series(b["url"])
-                for i, h in enumerate(hosts.tolist()):
-                    if method[i] is None and h in hints:
-                        lat[i], lon[i] = hints[h]
-                        method[i] = "host"
+            lat, lon = _py_coords(b)
+            method = np.where(np.isnan(lat), None, "inline")
+            method[_fill_from_hints(hints, b["url"], lat, lon)] = "host"
             x, y = proj.forward(lon, lat)
             ok = np.isfinite(x) & np.isfinite(y)
             cell = np.where(
@@ -150,32 +185,28 @@ def assign_polygons(
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idx = idx_bc.value
+        names = np.asarray(idx.poly_ids, dtype=object)
         for b in batches:
-            n = len(b)
-            poly = np.array([None] * n, dtype=object)
             x = b["x"].to_numpy(dtype=np.float64, na_value=np.nan)
             y = b["y"].to_numpy(dtype=np.float64, na_value=np.nan)
-            ok = np.isfinite(x) & np.isfinite(y)
-            if ok.any():
-                rows, ords = gindex.assign_points(
-                    idx, x[ok], y[ok], boundary=boundary, match=match
-                )
-                ok_idx = np.nonzero(ok)[0]
-                if match != "all":
-                    for r, o in zip(rows, ords):
-                        poly[ok_idx[r]] = idx.poly_ids[o]
-                else:
+            if match == "all":
+                ok = np.isfinite(x) & np.isfinite(y)
+                if ok.any():
                     # multi-match: emit one row per (point, polygon) pair
+                    rows, ords = gindex.assign_points(
+                        idx, x[ok], y[ok], boundary=boundary, match=match
+                    )
+                    ok_idx = np.flatnonzero(ok)
                     out = b[in_cols].iloc[ok_idx[rows]].copy()
-                    out["poly_id"] = [idx.poly_ids[o] for o in ords]
-                    miss = np.ones(n, dtype=bool)
+                    out["poly_id"] = names[ords]
+                    miss = np.ones(len(b), dtype=bool)
                     miss[ok_idx[rows]] = False
                     rest = b[in_cols][miss].copy()
                     rest["poly_id"] = None
                     yield pd.concat([out, rest], ignore_index=True)
                     continue
             out = b[in_cols].copy()
-            out["poly_id"] = poly
+            out["poly_id"] = _poly_column(idx, names, x, y, boundary, match)
             yield out
 
     return resolved.mapInPandas(fn, schema=out_schema)
@@ -240,11 +271,9 @@ def tag_pages(
     never re-read a page payload for a second metric pass (text still
     crosses for the metrics; html still doesn't).
     """
-    from .dedup import simhash_batch
+    from .dedup import simhash_counts
 
-    hints = {}
-    if host_hints is not None and len(host_hints):
-        hints = {r.host: (float(r.lat), float(r.lon)) for r in host_hints.itertuples()}
+    hints = _hint_table(host_hints)
 
     schema = "url string, poly_id string, x double, y double"
     if with_metrics:
@@ -252,91 +281,38 @@ def tag_pages(
 
     if jvm_extract:
         jlat, jlon = _jvm_coords(pages)
-        cols = ["url", jlat.alias("lat"), jlon.alias("lon")] + (
-            ["text"] if with_metrics else []
+        src = pages.select(
+            "url",
+            jlat.alias("lat"),
+            jlon.alias("lon"),
+            *(["text"] if with_metrics else []),
         )
-        src = pages.select(*cols)
-
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            idx = idx_bc.value
-            for b in batches:
-                n = len(b)
-                lat = b["lat"].to_numpy(dtype=np.float64, na_value=np.nan)
-                lon = b["lon"].to_numpy(dtype=np.float64, na_value=np.nan)
-                if with_metrics:
-                    texts = b["text"].tolist()
-                    ntok = np.array(
-                        [len((t or "").split()) for t in texts], dtype=np.int32
-                    )
-                    sims = simhash_batch(texts)
-                if hints:
-                    miss = np.isnan(lat)
-                    if miss.any():
-                        hosts = hx.host_series(b["url"])
-                        for i in np.nonzero(miss)[0]:
-                            h = hosts.iat[i]
-                            if h in hints:
-                                lat[i], lon[i] = hints[h]
-                x, y = proj.forward(lon, lat)
-                ok = np.isfinite(x) & np.isfinite(y)
-                poly = np.array([None] * n, dtype=object)
-                if ok.any():
-                    rows, ords = gindex.assign_points(
-                        idx, x[ok], y[ok], boundary=boundary, match="last"
-                    )
-                    ok_idx = np.nonzero(ok)[0]
-                    for r, o in zip(rows, ords):
-                        poly[ok_idx[r]] = idx.poly_ids[o]
-                out = {"url": b["url"], "poly_id": poly, "x": x, "y": y}
-                if with_metrics:
-                    out["n_tokens"] = ntok
-                    out["simhash"] = sims
-                yield pd.DataFrame(out)
-
-        return src.mapInPandas(fn, schema=schema)
+    else:
+        src = pages.select("url", "html", "text")
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idx = idx_bc.value
+        names = np.asarray(idx.poly_ids, dtype=object)
         for b in batches:
-            n = len(b)
-            lat = np.full(n, np.nan)
-            lon = np.full(n, np.nan)
-            htmls = b["html"].tolist()
-            texts = b["text"].tolist()
-            for i in range(n):
-                got = hx.extract_coords(htmls[i], texts[i])
-                if got is not None:
-                    lat[i], lon[i] = got
-            if with_metrics:
-                ntok = np.array(
-                    [len((t or "").split()) for t in texts], dtype=np.int32
-                )
-                sims = simhash_batch(texts)
-            if hints:
-                miss = np.isnan(lat)
-                if miss.any():
-                    hosts = hx.host_series(b["url"])
-                    for i in np.nonzero(miss)[0]:
-                        h = hosts.iat[i]
-                        if h in hints:
-                            lat[i], lon[i] = hints[h]
+            if jvm_extract:
+                lat = b["lat"].to_numpy(dtype=np.float64, na_value=np.nan)
+                lon = b["lon"].to_numpy(dtype=np.float64, na_value=np.nan)
+            else:
+                lat, lon = _py_coords(b)
+            _fill_from_hints(hints, b["url"], lat, lon)
             x, y = proj.forward(lon, lat)
-            ok = np.isfinite(x) & np.isfinite(y)
-            poly = np.array([None] * n, dtype=object)
-            if ok.any():
-                rows, ords = gindex.assign_points(
-                    idx, x[ok], y[ok], boundary=boundary, match="last"
-                )
-                ok_idx = np.nonzero(ok)[0]
-                for r, o in zip(rows, ords):
-                    poly[ok_idx[r]] = idx.poly_ids[o]
-            out = {"url": b["url"], "poly_id": poly, "x": x, "y": y}
+            out = {
+                "url": b["url"],
+                "poly_id": _poly_column(idx, names, x, y, boundary, "last"),
+                "x": x,
+                "y": y,
+            }
             if with_metrics:
-                out["n_tokens"] = ntok
+                sims, out["n_tokens"] = simhash_counts(b["text"].tolist())
                 out["simhash"] = sims
             yield pd.DataFrame(out)
 
-    return pages.select("url", "html", "text").mapInPandas(fn, schema=schema)
+    return src.mapInPandas(fn, schema=schema)
 
 
 def pages_per_region(

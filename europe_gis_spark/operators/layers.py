@@ -87,7 +87,7 @@ def polygonize(tiles: DataFrame, tile_w: int = 16) -> DataFrame:
     """
     from ..geo import wkb as gwkb
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         layer, trow, tcol = key
         rows = []
         for t in pdf.itertuples():
@@ -213,7 +213,7 @@ def _tile_cc_tagged(tiles: DataFrame, tile_w: int, with_rects: bool) -> DataFram
     label (global pixel bounds in ymin..xmax), the building blocks for
     region geometry reconstruction."""
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         layer, trow, tcol = key
         rows = []
         for t in pdf.itertuples():
@@ -571,7 +571,7 @@ def region_geometries(
         tagged.filter(F.col("kind") == 3), mapping, bcast_ok
     )
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         layer, region_id = key
         wkb_bytes, n_px = _rects_to_polygon(
             pdf[["ymin", "xmin", "ymax", "xmax"]].itertuples(index=False)

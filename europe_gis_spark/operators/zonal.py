@@ -56,7 +56,7 @@ def cells_to_tiles(
     array assembly is numpy inside applyInPandas.
     """
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         import numpy as np
 
         layer, trow, tcol = key

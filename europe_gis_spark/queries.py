@@ -93,12 +93,16 @@ def _read_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     shuffle's fixed cost exceeds the parallelism gain and the plain
     scan is returned unchanged. The size is Catalyst's own estimate of
     the scan (the on-disk file bytes), so the gate holds on any
-    filesystem the reader does."""
+    filesystem the reader does. A scan that already splits into at
+    least ``defaultParallelism`` partitions (a multi-file table) is
+    returned unchanged too; its partition count comes from the planned
+    scan's file splits, which runs no job."""
     df = _read(spark, sf_dir, name)
+    n = spark.sparkContext.defaultParallelism
     size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    if size < _SPREAD_MIN_BYTES:
+    if size < _SPREAD_MIN_BYTES or df._jdf.rdd().getNumPartitions() >= n:
         return df
-    return df.repartition(spark.sparkContext.defaultParallelism)
+    return df.repartition(n)
 
 
 def event_points(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -385,6 +385,63 @@ def test_index_assign_points_first_and_all():
     assert pairs == {(0, "A"), (1, "A"), (2, "B")}
 
 
+    # brute-force oracle: every point against every polygon. Overlaps
+    # (A/B/DONUT/MULTI), a hole, a concave part, every vertex and edge
+    # midpoint, and points west/south of the grid origin (cell -1)
+    moved = [np.array([8.0, 8.0]), np.array([16.0, 1.0])]
+    polys += [
+        ("DONUT", wkb.encode_polygon(DONUT)),
+        ("L", wkb.encode_polygon([LPOLY[0] + moved[0]])),
+        ("MULTI", wkb.encode_multipolygon([[SQUARE[0] + moved[1]], [LPOLY[0] + moved[0]]])),
+    ]
+    idx = index.build_index(polys, res=22)  # 2 m cells
+    assert idx.poly_ids == ["A", "B", "DONUT", "L", "MULTI"]
+    rng = np.random.default_rng(11)
+    rings = [r for parts in idx.parts for rs in parts for r in rs]
+    edge = np.concatenate([np.vstack([r, (r[1:] + r[:-1]) / 2]) for r in rings])
+    px = np.concatenate([rng.uniform(-3.0, 24.0, 3000), edge[:, 0], [-0.5, 3.0]])
+    py = np.concatenate([rng.uniform(-3.0, 16.0, 3000), edge[:, 1], [2.0, -0.5]])
+    assert (cells.cell_id(px, py, idx.res) == -1).sum() > 100
+    for boundary in ("include", "exclude"):
+        hit = np.stack(
+            [geom.points_in_polygon(px, py, p, boundary) for p in idx.parts], axis=1
+        )
+        want_rows, want_ords = np.nonzero(hit)  # (row, ordinal) order
+        assert len(np.unique(want_rows)) < len(want_rows)  # overlaps exercised
+        got = index.assign_points(idx, px, py, boundary=boundary, match="all")
+        np.testing.assert_array_equal(got[0], want_rows)
+        np.testing.assert_array_equal(got[1], want_ords)
+        rows = np.flatnonzero(hit.any(axis=1))
+        for match, ords in (
+            ("first", hit[rows].argmax(axis=1)),
+            ("last", hit.shape[1] - 1 - hit[rows, ::-1].argmax(axis=1)),
+        ):
+            got = index.assign_points(idx, px, py, boundary=boundary, match=match)
+            np.testing.assert_array_equal(got[0], rows)
+            np.testing.assert_array_equal(got[1], ords)
+            assert got[0].dtype == np.int64 and got[1].dtype == np.int32
+
+    # an index with no valid polygon matches nothing, in every mode
+    empty = index.build_index(polys[2:3], res=22)
+    assert empty.poly_ids == [] and len(empty.cell_keys) == 0
+    for match in ("last", "first", "all"):
+        r, o = index.assign_points(empty, px, py, match=match)
+        assert len(r) == 0 and len(o) == 0
+
+
+@pytest.mark.xfail(strict=True, reason="index cover is exact, PIP boundary is EPS-tolerant")
+def test_index_assign_points_eps_outside_edge_on_grid_edge():
+    """Known gap: ``points_in_polygon`` counts a point within ``EPS``
+    OUTSIDE an edge as on the boundary, but the cell cover is exact, so
+    when that sliver lies in a cell the cover does not hold (here: west
+    of the grid origin, cell -1) the index never tests the point."""
+    idx = index.build_index([("A", wkb.encode_polygon(SQUARE))], res=22)
+    px, py = np.array([-1e-9]), np.array([1.0])
+    assert geom.points_in_polygon(px, py, idx.parts[0], "include")[0]
+    rows, _ = index.assign_points(idx, px, py, boundary="include")
+    assert rows.tolist() == [0]
+
+
 # ----------------------------------------------------------- simplification
 def test_simplify_ring_drops_collinear_and_respects_tol():
     from europe_gis_spark.geo.geom import simplify_ring

@@ -655,3 +655,34 @@ def test_read_spread_size_gate_holds_on_file_uri(spark, monkeypatch):
         queries._read_spread(spark, "file://" + SF_SMOKE, "documents"), mode="simple"
     )
     assert "RoundRobinPartitioning" in p, p
+
+
+def test_read_spread_skips_a_scan_already_split_across_cores(
+    spark, monkeypatch, tmp_path
+):
+    """A multi-file table scans as one task per file: with at least
+    ``defaultParallelism`` files there is nothing to spread, so no
+    round-robin Exchange is planned even past the size gate. Reading
+    the partition count runs no extra job: ``_read_spread`` issues
+    exactly the jobs the plain ``_read`` does (parquet schema inference)."""
+    from europe_gis_spark import queries
+    from conftest import SF_SMOKE
+
+    sc = spark.sparkContext
+    n = sc.defaultParallelism
+    spark.read.parquet(f"{SF_SMOKE}/documents.parquet").repartition(n).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    monkeypatch.setattr(queries, "_SPREAD_MIN_BYTES", 0)
+    jobs = {}
+    try:
+        for name, read in (("read", queries._read), ("spread", queries._read_spread)):
+            sc.setJobGroup(f"read_spread_{name}", name)
+            df = read(spark, str(tmp_path), "documents")
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"read_spread_{name}"))
+    finally:
+        sc.setJobGroup("", "")
+    assert df.rdd.getNumPartitions() >= n
+    p = plan_str(df, mode="simple")
+    assert "RoundRobinPartitioning" not in p, p
+    assert jobs["spread"] == jobs["read"], jobs
